@@ -1,16 +1,17 @@
-"""Physics column functions: Planck forward/inverse, normal CDF, FRP family.
+"""Physics column functions: inverse Planck (brightness temperature),
+normal CDF, MCE, and the Planck constants the fit kernels share.
 
-Each function exists as a PySpark Column expression (JVM math, codegen'd)
-and a numpy twin (``_np``) for the oracle. Where the driver's DuckDB oracle
-needs the identical formula, a ``*_SQL`` template is provided so Spark and
-DuckDB evaluate literally the same arithmetic (same constants, same op
-order) — float64 both sides.
+Column expressions run as JVM math (codegen'd); ``normal_cdf`` also has a
+numpy twin (``_np``). Where the DuckDB oracle needs the identical
+formula, a ``*_sql`` template is provided so Spark and DuckDB evaluate
+literally the same arithmetic (same constants, same op order) — float64
+both sides.
 
 Constants mirror the reference:
-- planck_func c1=1.191042e8, c2=1.4387752e4 (FILDA_BT.py:136-151).
+- planck_func c1=1.191042e8, c2=1.4387752e4 (FILDA_BT.py:136-151); the
+  single source for ``kernels.planck_rad`` and the Planck fit.
 - cal_brightness_temperature h/k/c (FILDA_BT.py:99-121).
-- FRP constant c=2.88e-9, sigma_SB, VE twilight correction, MCE
-  (FILDA.py:1502-1526).
+- MCE (FILDA.py:1521-1526).
 """
 
 from __future__ import annotations
@@ -24,13 +25,6 @@ C2 = 1.4387752e4  # um*K
 H_PLANCK = 6.62607015e-34
 K_BOLTZ = 1.38064852e-23
 C_LIGHT = 299792458.0
-SIGMA_SB = 5.670374419e-8
-FRP_C = 2.88e-9  # FILDA.py:1502-1526 (W m-2 sr-1 um-1 K-4 scaling)
-
-
-def planck_radiance(lamda_um: float, temp_k: Column) -> Column:
-    """planck_func (FILDA_BT.py:136-151): W/m2/sr/um."""
-    return F.lit(C1) / F.lit(lamda_um**5) / (F.exp(F.lit(C2 / lamda_um) / temp_k) - F.lit(1.0))
 
 
 def brightness_temperature(rad: Column, lamda_um: float) -> Column:
@@ -42,17 +36,6 @@ def brightness_temperature(rad: Column, lamda_um: float) -> Column:
     a = H_PLANCK * C_LIGHT / (K_BOLTZ * lam_m)
     b = 2.0 * H_PLANCK * C_LIGHT**2 * lam_m**-5.0
     return F.lit(a) / F.log(F.lit(b) / (rad * F.lit(1e6)) + F.lit(1.0))
-
-
-def planck_radiance_np(lamda_um, temp_k):
-    return C1 / lamda_um**5 / (np.exp(C2 / lamda_um / temp_k) - 1.0)
-
-
-def brightness_temperature_np(rad, lamda_um):
-    lam_m = lamda_um * 1e-6
-    a = H_PLANCK * C_LIGHT / (K_BOLTZ * lam_m)
-    b = 2.0 * H_PLANCK * C_LIGHT**2 * lam_m**-5.0
-    return a / np.log(b / (np.asarray(rad, dtype=np.float64) * 1e6) + 1.0)
 
 
 # SQL template with identical constants/op-order, for DuckDB oracle parity.
@@ -118,37 +101,6 @@ def normal_cdf_sql(z_expr: str) -> str:
     return f"(CASE WHEN {z} >= 0 THEN {upper} ELSE 1.0 - {upper} END)"
 
 
-# --- FRP family (FILDA.py:1502-1526) -----------------------------------------
-
-
-def fire_radiative_power(area_m2: Column, rad_m13: Column, rad_bg_m13: Column) -> Column:
-    """FRP = A * sigma_SB * (L - L_bg) / c * 1e-6  [MW]."""
-    return area_m2 * F.lit(SIGMA_SB) * (rad_m13 - rad_bg_m13) / F.lit(FRP_C) * F.lit(1e-6)
-
-
-def visible_energy(area_m2: Column, dnb_rad: Column, solar_zenith: Column) -> Column:
-    """VE with twilight linear correction for solar_zenith in (92.5, 97.5)."""
-    corr = F.when(
-        (solar_zenith > 92.5) & (solar_zenith < 97.5),
-        (F.lit(97.5) - solar_zenith) / F.lit(5.0),
-    ).otherwise(F.lit(1.0))
-    return area_m2 * dnb_rad * F.lit(1e-9) * F.lit(1e4) * corr * F.lit(np.pi) * F.lit(1e-6)
-
-
-def fire_radiative_power_np(area_m2, rad_m13, rad_bg_m13):
-    return np.asarray(area_m2) * SIGMA_SB * (np.asarray(rad_m13) - np.asarray(rad_bg_m13)) / FRP_C * 1e-6
-
-
-def visible_energy_np(area_m2, dnb_rad, solar_zenith):
-    sz = np.asarray(solar_zenith, dtype=np.float64)
-    corr = np.where((sz > 92.5) & (sz < 97.5), (97.5 - sz) / 5.0, 1.0)
-    return np.asarray(area_m2) * np.asarray(dnb_rad) * 1e-9 * 1e4 * corr * np.pi * 1e-6
-
-
 def mce(vef: Column) -> Column:
     """MCE = ln(2*VEF)*0.017 + 1 (FILDA.py:1521-1526)."""
     return F.log(F.lit(2.0) * vef) * F.lit(0.017) + F.lit(1.0)
-
-
-def mce_np(vef):
-    return np.log(2.0 * np.asarray(vef, dtype=np.float64)) * 0.017 + 1.0

@@ -1,5 +1,5 @@
 """Grid systems: hierarchical cell index (H3/S2-style), Plate-Carrée tiles,
-sinusoidal tiles, regular lat/lon grids, I<->M pixel arithmetic, Julian day.
+sinusoidal tiles, regular lat/lon grids, Julian day.
 
 Everything here exists twice:
 - as pure PySpark Column expressions (JVM-side, whole-stage-codegen eligible,
@@ -19,7 +19,6 @@ Reference grid formulas mirrored bit-exactly (floor-division semantics):
 - Sinusoidal projection/tiles: reference FILDA_Time_Cord.py:538-593, 808-922
   (R = 6,371,007.181 m), with the +resol/2 rounding of FILDA.py:1679-1692.
 - Regular-grid index: latIdx=(lat+90)//resol_lat (FILDA_Cloud.py:129-156).
-- I<->M band arithmetic: I (l,s) -> M (l//2, s//2) (FILDA.py:507-508).
 """
 
 from __future__ import annotations
@@ -58,21 +57,6 @@ def cell_level(cell: Column) -> Column:
 def cell_xy(cell: Column) -> tuple[Column, Column]:
     rem = cell % F.lit(_LVL_SHIFT)
     return (rem % F.lit(_Y_SHIFT)).cast("long"), (rem / F.lit(_Y_SHIFT)).cast("long")
-
-
-def cell_parent(cell: Column, steps: int = 1) -> Column:
-    """Parent cell ``steps`` levels up (x,y right-shifted)."""
-    lvl = cell_level(cell)
-    x, y = cell_xy(cell)
-    d = F.lit(1 << steps)
-    return (lvl - F.lit(steps)) * F.lit(_LVL_SHIFT) + F.floor(y / d).cast("long") * F.lit(_Y_SHIFT) + F.floor(
-        x / d
-    ).cast("long")
-
-
-def cell_token(cell: Column) -> Column:
-    """S2-style opaque string token: hex of the packed id."""
-    return F.lower(F.hex(cell))
 
 
 def cell_kring(cell: Column, k: int = 1) -> Column:
@@ -149,18 +133,6 @@ def cell_encode_np(lat, lon, level: int):
     return np.int64(level) * np.int64(_LVL_SHIFT) + y * np.int64(_Y_SHIFT) + x
 
 
-def cell_center_np(cell):
-    cell = np.asarray(cell, dtype=np.int64)
-    lvl = cell // _LVL_SHIFT
-    rem = cell % _LVL_SHIFT
-    x = rem % _Y_SHIFT
-    y = rem // _Y_SHIFT
-    n = np.left_shift(np.int64(1), lvl)
-    lon = (x + 0.5) / n * 360.0 - 180.0
-    lat = 90.0 - (y + 0.5) / n * 180.0
-    return lat, lon
-
-
 # --- Plate-Carrée 10x10 deg tiles (hXXvYY) ----------------------------------
 
 PC_TILE_CELLS = 2400  # reference tile raster size (FILDA_Time_Cord.py:403-427)
@@ -212,34 +184,6 @@ SINU_X0 = -20015109.354
 SINU_Y1 = 10007554.677
 
 
-def sinu_xy(lat: Column, lon: Column) -> tuple[Column, Column]:
-    """Forward sinusoidal projection (FILDA_Time_Cord.py:538-560)."""
-    x = F.lit(SINU_R) * F.radians(lon) * F.cos(F.radians(lat))
-    y = F.lit(SINU_R) * F.radians(lat)
-    return x, y
-
-
-def sinu_tile_hv(lat: Column, lon: Column) -> tuple[Column, Column]:
-    x, y = sinu_xy(lat, lon)
-    h = F.floor((x - F.lit(SINU_X0)) / F.lit(SINU_TILE_M)).cast("int")
-    v = F.floor((F.lit(SINU_Y1) - y) / F.lit(SINU_TILE_M)).cast("int")
-    return h, v
-
-
-def sinu_tile_yx(lat: Column, lon: Column, cells: int = 2400) -> tuple[Column, Column]:
-    """Within-tile row/col with the reference's +resol/2 centre rounding
-    (FILDA.py:1679-1692)."""
-    resol = SINU_TILE_M / cells
-    x, y = sinu_xy(lat, lon)
-    h = F.floor((x - F.lit(SINU_X0)) / F.lit(SINU_TILE_M))
-    v = F.floor((F.lit(SINU_Y1) - y) / F.lit(SINU_TILE_M))
-    x_min = F.lit(SINU_X0) + h * F.lit(SINU_TILE_M)
-    y_max = F.lit(SINU_Y1) - v * F.lit(SINU_TILE_M)
-    col = F.floor((x - x_min + F.lit(resol / 2.0)) / F.lit(resol)).cast("int")
-    row = F.floor((y_max - y + F.lit(resol / 2.0)) / F.lit(resol)).cast("int")
-    return row, col
-
-
 def sinu_np(lat, lon, cells: int = 2400):
     lat = np.asarray(lat, dtype=np.float64)
     lon = np.asarray(lon, dtype=np.float64)
@@ -256,13 +200,6 @@ def sinu_np(lat, lon, cells: int = 2400):
 
 
 # --- regular lat/lon grids ----------------------------------------------------
-
-
-def regular_grid_idx(lat: Column, lon: Column, resol_lat: float, resol_lon: float) -> tuple[Column, Column]:
-    """GEOS-FP style gather index (FILDA_Cloud.py:129-156)."""
-    lat_idx = F.floor((lat + F.lit(90.0)) / F.lit(resol_lat)).cast("int")
-    lon_idx = F.floor((lon + F.lit(180.0)) / F.lit(resol_lon)).cast("int")
-    return lat_idx, lon_idx
 
 
 def regular_grid_idx_np(lat, lon, resol_lat: float, resol_lon: float):
@@ -291,15 +228,4 @@ def julian_day_number_np(year, month, day):
     return day + (153 * m + 2) // 5 + 365 * y + y // 4 - y // 100 + y // 400 - 32045
 
 
-def overpass_interval_idx(ts: Column) -> Column:
-    """6-minute overpass bucket (MCBEF_SPACE_TIME.py:935-947:
-    (h*60+m)//6)."""
-    return F.floor((F.hour(ts) * F.lit(60) + F.minute(ts)) / F.lit(6)).cast("int")
-
-
 # --- I <-> M band pixel arithmetic ---------------------------------------------
-
-
-def img_to_mod(line: Column, sample: Column) -> tuple[Column, Column]:
-    """I-band (375 m) pixel -> hosting M-band (750 m) pixel (FILDA.py:507-508)."""
-    return F.floor(line / F.lit(2)).cast("int"), F.floor(sample / F.lit(2)).cast("int")

@@ -175,10 +175,6 @@ def hex_distance_np(cell_a, cell_b):
     return (np.abs(dq) + np.abs(dr) + np.abs(dq + dr)) // 2
 
 
-def token_np(cell):
-    return np.array([format(int(c), "x") for c in np.atleast_1d(np.asarray(cell))])
-
-
 # --- PySpark Column twins ---------------------------------------------------
 
 

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from filda_spark.functions.physics import normal_cdf_np
+from filda_spark.functions.physics import C1, C2, normal_cdf_np
 from filda_spark.namelist import ANCILLARY_BANDS, LAMBDA_UM
 
 # Planck constants — FILDA_BT.py:99-121 exactly.
@@ -54,10 +54,9 @@ def bt_from_rad(rad, lamda_um: float):
 
 def planck_rad(lamda_um: float, temp_k):
     """Forward Planck radiance (W/m2/sr/um), FILDA_BT.py:136-151 constants."""
-    c1, c2 = 1.191042e8, 1.4387752e4
     t = np.asarray(temp_k, dtype=np.float64)
     with np.errstate(over="ignore"):
-        return c1 / lamda_um**5 / (np.exp(c2 / lamda_um / t) - 1.0)
+        return C1 / lamda_um**5 / (np.exp(C2 / lamda_um / t) - 1.0)
 
 
 # ---------------------------------------------------------------------------
@@ -803,9 +802,7 @@ FIT_BANDS = ("M11", "M12", "M13", "M14", "M15")
 FIT_BOUNDS = np.array([[550.0, 2200.0], [230.0, 335.0], [5e-5, 0.4]])
 FIT_X0 = np.array([750.0, 288.0, 0.002])
 _FIT_LAM = np.array([LAMBDA_UM[b] for b in FIT_BANDS])
-
-
-_FIT_C1, _FIT_C2 = 1.191042e8, 1.4387752e4
+_FIT_C1, _FIT_C2 = C1, C2
 
 
 def _fit_residual(x: np.ndarray, obs: np.ndarray) -> float:

@@ -799,9 +799,10 @@ def perimeters(tiles_df: DataFrame) -> DataFrame:
     — the rasterized boundary length), and the bounding-box ring as WKT.
 
     Scale: edges ≈ 4 × inhabited cells (~1e8 rows at global r7 — tiny next
-    to detections); each of the O(diameter) rounds is one equi-join shuffle
-    + one groupBy, and fire fronts are compact so the diameter is small.
-    No driver-side data: the loop compares a scalar changed-count per round.
+    to detections); each of the O(log diameter) rounds is one equi-join
+    shuffle + one groupBy + the pointer-doubling self-join, and fire fronts
+    are compact so the diameter is small. No driver-side data: the loop
+    compares a scalar label sum per round (functions.graph.fixpoint).
     Antimeridian-crossing regions get the raw min/max-x box (no wrap
     normalization) — deterministic, mirrored exactly in the oracle SQL.
     """

@@ -726,12 +726,12 @@ _CC_CTES = f"""pairs AS ({_REGISTRY["minhash_lsh_pairs"].oracle}),
 def dup_components(spark, sf_dir):
     """Distributed min-label propagation to the unique fixpoint (label =
     min doc_id reachable): each round every node takes the min of its own
-    and its neighbours' labels; converges in O(component diameter) rounds
-    (LSH near-dup clusters are dense, so a handful). Per round: one shuffle
-    join edges->labels + one groupBy — the standard Pregel-style CC without
-    a graph library. localCheckpoint truncates the iterative lineage so the
-    plan does not grow with rounds. The driver-side loop only compares a
-    scalar changed-count per round (no data collected)."""
+    and its neighbours' labels, then its label's label (pointer doubling);
+    LSH near-dup clusters are dense, so a handful of rounds. The standard
+    Pregel-style CC without a graph library, run by
+    functions.graph.fixpoint: per-round localCheckpoint keeps the plan
+    constant-size, and the loop only compares a scalar label sum per round
+    (no data collected)."""
     pairs = _REGISTRY["minhash_lsh_pairs"].fn(spark, sf_dir).select("doc_a", "doc_b")
     docs = _t(spark, sf_dir, "documents").select(F.col("doc_id").cast("long").alias("doc"))
     edges = (

@@ -287,6 +287,82 @@ def test_min_label_components_matches_union_find(spark):
         assert got == want, f"trial {trial}"
 
 
+def _fixpoint_counting(spark, step, max_rounds, **kw):
+    """Run graph.fixpoint from a one-row seed v=0, counting step calls."""
+    from filda_spark.functions.graph import fixpoint
+
+    calls = []
+
+    def counted(df):
+        calls.append(1)
+        return step(df)
+
+    out = fixpoint(
+        spark.createDataFrame([(0,)], "v long"), counted, max_rounds, **kw
+    )
+    return out.first()["v"], len(calls)
+
+
+def test_fixpoint_stops_one_round_after_the_fixpoint(spark):
+    """v -> min(v + 1, 3) reaches its fixpoint at round 3; the repeat of
+    the progress value is seen at round 4, and the loop stops there."""
+    from pyspark.sql import functions as F
+
+    v, calls = _fixpoint_counting(
+        spark,
+        lambda df: df.select(F.least(F.col("v") + 1, F.lit(3)).alias("v")),
+        10,
+        progress=F.sum("v"),
+        must_converge=True,
+    )
+    assert (v, calls) == (3, 4)
+
+
+def test_fixpoint_without_progress_runs_every_round(spark):
+    from pyspark.sql import functions as F
+
+    v, calls = _fixpoint_counting(
+        spark,
+        lambda df: df.select(F.least(F.col("v") + 1, F.lit(3)).alias("v")),
+        5,
+    )
+    assert (v, calls) == (3, 5)
+
+
+def test_fixpoint_must_converge_raises_at_the_cap(spark):
+    import pytest
+    from pyspark.sql import functions as F
+
+    with pytest.raises(RuntimeError, match="no fixpoint within 3 rounds"):
+        _fixpoint_counting(
+            spark,
+            lambda df: df.select((F.col("v") + 1).alias("v")),
+            3,
+            progress=F.sum("v"),
+            must_converge=True,
+        )
+
+
+def test_min_label_components_raises_when_rounds_run_out(spark):
+    """A 64-node path needs ~log2(64) doubling rounds; two rounds must
+    raise rather than return a split component."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from filda_spark.functions.graph import min_label_components
+
+    n = 64
+    sym = [(i, i + 1) for i in range(n - 1)] + [(i + 1, i) for i in range(n - 1)]
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
+    with pytest.raises(RuntimeError, match="no fixpoint within 2 rounds"):
+        min_label_components(
+            nodes.select("node", F.col("node").alias("component")),
+            spark.createDataFrame(sym, "src long, dst long"),
+            "node",
+            max_iters=2,
+        )
+
+
 def test_morton_key_column_matches_numpy(spark):
     """functions.bits.morton_key (Column twin) against an independent numpy
     interleave over random coordinates, including clamp behavior at the

@@ -1803,7 +1803,7 @@ def test_flow_length_matches_walk(spark, sf_dir):
             c, cost = step[c][0], step[c][1]
             hops += 1
             length += cost
-            assert hops <= 2 ** relational._FL_ROUNDS
+            assert hops <= 2 ** relational._WB_ROUNDS
         assert r.hops == hops
         assert abs(r.flow_len - round(length, 6)) < 1e-9
         moved += hops > 0
